@@ -5,7 +5,7 @@ import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.streaming.IncrementalDedupStream
+import graft.streaming.{EpochStore, IncrementalDedupStream}
 
 /** Streaming incremental dedup must keep first-seen content only —
   * within a batch and across batches — treat NULL text as always
@@ -65,9 +65,8 @@ class IncrementalDedupStreamSpec extends AnyFunSuite {
     // every stored hp value is the write-side function of its hash —
     // the probe recomputes the same function on the batch side, so a
     // mismatch here would break pruning correctness (missed duplicates)
-    val nHp = IncrementalDedupStream.hashParts(spark)
     assert(stored.filter(
-      col("hp") =!= pmod(xxhash64(col("h")), lit(nHp.toLong)))
+      col("hp") =!= pmod(xxhash64(col("h")), lit(EpochStore.HashParts.toLong)))
       .count() == 0)
 
     // replay epoch 1 directly: same survivors, store unchanged —
@@ -107,5 +106,46 @@ class IncrementalDedupStreamSpec extends AnyFunSuite {
       .select("doc_id").collect().map(_.getLong(0)).sorted.toSeq
     assert(survivors == Seq(4L), s"cross-batch dedup lost: $survivors")
     assert(spark.read.parquet(store).count() == 3) // alpha, beta, gamma
+  }
+
+  test("two same-shape streams probing concurrently in one session " +
+      "never cross blooms and leave no temp view behind") {
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.duration._
+    import scala.concurrent.ExecutionContext.Implicits.global
+    import scala.jdk.CollectionConverters._
+    def batch(rows: Seq[(Long, String)]) = spark.createDataFrame(
+      rows.map { case (id, t) => Row(Long.box(id), t) }.asJava, schema)
+    // each stream's epoch 1 repeats only ITS OWN epoch-0 content: probed
+    // with the other stream's bloom, the store row would be pruned and
+    // the duplicate kept
+    def epochs(tag: String): Seq[Seq[(Long, String)]] = Seq(
+      (0L until 8L).map(i => (i, s"$tag-seen-$i")),
+      (10L until 18L).map(i => (i, s"$tag-seen-${i - 10}")) ++
+        Seq((20L, s"$tag-novel")))
+    def run(tag: String, root: String): Seq[Seq[Long]] = {
+      val out = s"$root/out-$tag"; val store = s"$root/store-$tag"
+      epochs(tag).zipWithIndex.foreach { case (rows, b) =>
+        IncrementalDedupStream.processBatch(batch(rows), b.toLong, out, store)
+      }
+      (0 to 1).map(b => spark.read.parquet(out).filter(col("batch_id") === b)
+        .select("doc_id").collect().map(_.getLong(0)).sorted.toSeq)
+    }
+    // views other suites' batch queries left in the shared session
+    def graftViews() = spark.catalog.listTables().collect().map(_.name)
+      .filter(_.startsWith("graft_")).toSet
+    val viewsBefore = graftViews()
+    val tags = Seq("a", "b", "c", "d")
+    val solo = Files.createTempDirectory("incdedup-solo").toString
+    val expected = tags.map(t => t -> run(t, solo)).toMap
+    assert(expected("a") == Seq((0L until 8L), Seq(20L)))
+    val shared = Files.createTempDirectory("incdedup-shared").toString
+    val concurrent = Await.result(
+      Future.sequence(tags.map(t => Future(t -> run(t, shared)))), 5.minutes)
+    concurrent.foreach { case (t, got) =>
+      assert(got == expected(t), s"stream $t diverged from its solo run")
+    }
+    val leaked = graftViews() -- viewsBefore
+    assert(leaked.isEmpty, s"temp views left behind: ${leaked.mkString(",")}")
   }
 }

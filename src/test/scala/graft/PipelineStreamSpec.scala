@@ -54,6 +54,18 @@ class PipelineStreamSpec extends AnyFunSuite {
     try q.processAllAvailable() finally q.stop()
   }
 
+  /** Curated text that passes every curation gate: lowercase words,
+    * >12% stopwords, healthy word length.
+    */
+  private val common = "the quick brown fox and the lazy dog jumps over " +
+    "the old wall in morning light"
+
+  private def frame(rows: Seq[(Long, String)]) = {
+    import scala.jdk.CollectionConverters._
+    spark.createDataFrame(
+      rows.map { case (id, t) => Row(Long.box(id), t) }.asJava, schema)
+  }
+
   private def verdicts(root: String): Map[Long, Row] =
     spark.read.parquet(s"$root/out/docs")
       .select("doc_id", "n_tokens", "curated", "exact_kept", "near_dup",
@@ -138,11 +150,8 @@ class PipelineStreamSpec extends AnyFunSuite {
     val root = Files.createTempDirectory("pipe-replay").toString
     val out = s"$root/out"; val store = s"$root/store"
 
-    // every text passes the curation gates: lowercase words, >12%
-    // stopwords, healthy word length — the spec asserts that below so
-    // a docFlags drift fails loudly instead of vacuously passing
-    val common = "the quick brown fox and the lazy dog jumps over " +
-      "the old wall in morning light"
+    // every text passes the curation gates — the spec asserts that
+    // below so a docFlags drift fails loudly instead of vacuously passing
     val mutual = common.replace("morning light", "morning shade")
     val long40 = ("the story of the river and the stone begins in " +
       "a valley of tall grass and slow water where the path turns " +
@@ -156,9 +165,6 @@ class PipelineStreamSpec extends AnyFunSuite {
     val unique = "the garden grows and the gate is open to the road " +
       "in the cool of evening air"
 
-    import scala.jdk.CollectionConverters._
-    def frame(rows: Seq[(Long, String)]) = spark.createDataFrame(
-      rows.map { case (id, t) => Row(id, t) }.asJava, schema)
     val evalSet = graft.operators.TextQueries
       .passageHashes(frame(Seq((0L, evalText))), stride = 1)
       .select(col("ph").as("eph")).distinct()
@@ -210,8 +216,11 @@ class PipelineStreamSpec extends AnyFunSuite {
     assert(spark.read.parquet(s"$store/ph").count() == phN)
   }
 
-  test("shard-store sum compaction keeps the packing fold equal to one " +
-      "global window, including across a compacting-epoch replay") {
+  /** 8 epochs × 4 docs, then a replay of epoch 6: the packing fold must
+    * equal one global window whether or not the shard store compacts.
+    * Returns the shard store's partition ids.
+    */
+  private def sumFoldRun(compactEvery: Int): Seq[Long] = {
     graft.plans.GraftExtensions.register(spark)
     val root = Files.createTempDirectory("pipe-sumfold").toString
     val out = s"$root/out"; val store = s"$root/store"
@@ -226,28 +235,24 @@ class PipelineStreamSpec extends AnyFunSuite {
       s"the ${tag(1)} road and the ${tag(2)} mill by the ${tag(3)} gate " +
         s"near the ${tag(4)} stream in the ${tag(5)} light of ${tag(6)} day"
     }
-    import scala.jdk.CollectionConverters._
-    def frame(rows: Seq[(Long, String)]) = spark.createDataFrame(
-      rows.map { case (id, t) => Row(id, t) }.asJava, schema)
     val evalSet = frame(Seq((0L, "alpha beta gamma delta epsilon zeta " +
       "eta theta iota kappa lambda mu")))
     val eph = graft.operators.TextQueries
       .passageHashes(evalSet, stride = 1)
       .select(col("ph").as("eph")).distinct()
 
-    // 8 epochs × 4 docs, compactEvery = 3: two sum-folds (-3, -6) plus
-    // a base tail — the coverage-aware read must count every committed
-    // epoch exactly once
+    // with compactEvery = 3: two sum-folds (-3, -6) plus a base tail —
+    // the coverage-aware read must count every committed epoch once
     (0L to 7L).foreach { b =>
       val docs = (0L until 4L).map(j => (b * 100 + j, text(b * 100 + j)))
       PipelineStream.processBatch(frame(docs), b, eph, out, store,
-        compactEvery = 3)
+        compactEvery = compactEvery)
     }
     // replay the last compacting epoch (6): gen -6 exists, its inputs
     // not yet deleted — the coverage-aware read must not double-count
     val b6 = (0L until 4L).map(j => (600L + j, text(600L + j)))
     PipelineStream.processBatch(frame(b6), 6L, eph, out, store,
-      compactEvery = 3)
+      compactEvery = compactEvery)
 
     import org.apache.spark.sql.expressions.Window
     val pd = spark.read.parquet(s"$out/docs")
@@ -260,14 +265,45 @@ class PipelineStreamSpec extends AnyFunSuite {
     assert(expected.count() > 0, "fixture produced no train docs")
     assert(expected.filter(col("bin") =!= col("expected_bin")).count() == 0,
       "sum-folded shard store diverged from the global packing fold")
-    // the shard store is actually folded: generations present, early
-    // base epochs retired
-    val shardParts = new java.io.File(s"$store/shard").listFiles()
+    new java.io.File(s"$store/shard").listFiles()
       .filter(_.getName.startsWith("batch_id="))
       .map(_.getName.stripPrefix("batch_id=").toLong).toSeq.sorted
+  }
+
+  test("shard-store sum compaction keeps the packing fold equal to one " +
+      "global window, including across a compacting-epoch replay") {
+    val shardParts = sumFoldRun(compactEvery = 3)
+    // the shard store is actually folded: generations present, early
+    // base epochs retired
     assert(shardParts.count(_ < 0) >= 2,
       s"expected sum-fold generations, got $shardParts")
     assert(!shardParts.exists(p => p >= 0 && p < 3),
       s"gen -3 base inputs leaked: $shardParts")
+  }
+
+  test("shard store with compaction off keeps a flat layout and the " +
+      "global packing fold") {
+    val shardParts = sumFoldRun(compactEvery = 0)
+    assert(shardParts == (0L to 7L), s"expected flat epochs: $shardParts")
+  }
+
+  test("a first store epoch that keeps no curated doc does not stall " +
+      "the stream") {
+    graft.plans.GraftExtensions.register(spark)
+    val root = Files.createTempDirectory("pipe-empty-epoch").toString
+    val out = s"$root/out"; val store = s"$root/store"
+    val eph = graft.operators.TextQueries
+      .passageHashes(frame(Seq((0L, "alpha beta gamma delta epsilon " +
+        "zeta eta theta iota kappa lambda mu"))), stride = 1)
+      .select(col("ph").as("eph")).distinct()
+    // epoch 0 holds only an eval-holdout doc (doc_id % 13 == 0): it is
+    // not curated, so every store's first epoch keeps nothing; epoch 1
+    // must still probe the (empty) stores and keep its novel doc
+    PipelineStream.processBatch(frame(Seq((13L, common))), 0L, eph, out, store)
+    PipelineStream.processBatch(frame(Seq((14L, common))), 1L, eph, out, store)
+    val v = spark.read.parquet(s"$out/docs")
+      .select("doc_id", "curated", "exact_kept").collect()
+      .map(r => r.getLong(0) -> ((r.getBoolean(1), r.getBoolean(2)))).toMap
+    assert(v == Map(13L -> ((false, false)), 14L -> ((true, true))), s"$v")
   }
 }
